@@ -12,6 +12,7 @@
 
 from __future__ import annotations
 
+import datetime as dt
 import time
 from dataclasses import dataclass
 from typing import Callable, TypeVar
@@ -88,28 +89,30 @@ class AuditRecord:
 
 @retry()
 def write_audit(spark: SparkSession, out_dir: str, rec: AuditRecord) -> None:
-    """One-row explicit-schema audit append; coalesce(1) is fine at this
-    cardinality (reference K4)."""
-    import datetime as dt
-
-    now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-    row = [
-        (
-            now,
-            rec.batch_id,
-            rec.source,
-            rec.fmt,
-            rec.total_rows,
-            rec.good_rows,
-            rec.bad_rows,
-            rec.status,
-            rec.message,
-            now.strftime("%Y-%m-%d"),
-        )
-    ]
+    """One-row explicit-schema audit append (reference K4). The row is
+    built in the JVM from literals over a one-partition range, so no
+    Python worker serializes it: one task, one part file."""
+    now = dt.datetime.now(dt.timezone.utc)
+    values = (
+        now,
+        rec.batch_id,
+        rec.source,
+        rec.fmt,
+        rec.total_rows,
+        rec.good_rows,
+        rec.bad_rows,
+        rec.status,
+        rec.message,
+        now.strftime("%Y-%m-%d"),
+    )
     (
-        spark.createDataFrame(row, AUDIT_SCHEMA)
-        .coalesce(1)
+        spark.range(0, 1, 1, 1)
+        .select(
+            *(
+                F.lit(v).cast(f.dataType).alias(f.name)
+                for v, f in zip(values, AUDIT_SCHEMA.fields)
+            )
+        )
         .write.mode("append")
         .partitionBy("audit_date")
         .parquet(out_dir)

@@ -13,8 +13,8 @@ Fixes applied vs the reference (SURVEY.md §4.3):
   exactly-once file tracking replaces ``dropDuplicates(file_path)``.
 - §4.3-3 action storm: good/bad/total counts come from ``observe()``
   metrics collected during the good-path write — ZERO extra count jobs
-  (the reference ran >=12 actions per batch; we run the sink writes plus
-  at most one tiny file-list collect over the persisted frame).
+  (the reference ran >=12 actions per batch; we run sink writes only;
+  the file list rides ``observe()``).
 - §4.3-6/7: typed empty frames, quarantine keyed by batch + source file
   column rather than comma-joined table names.
 - §4.3-8 at-least-once side effects: the good and quarantine sinks are
@@ -44,12 +44,14 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from advanced_real_time_data_pipeline_and_analytical_processing_spark.operators.cleaning import clean
+from advanced_real_time_data_pipeline_and_analytical_processing_spark.operators.cleaning import (
+    drop_all_null_rows,
+    trim_columns,
+)
 from advanced_real_time_data_pipeline_and_analytical_processing_spark.operators.enrichment import row_hash_expr
 from advanced_real_time_data_pipeline_and_analytical_processing_spark.operators.validation import (
     ERROR_COL,
     RuleSet,
-    validate,
 )
 from advanced_real_time_data_pipeline_and_analytical_processing_spark.sinks.bootstrap import (
     bootstrap_ingest_dirs,
@@ -130,43 +132,51 @@ def move_files(spark: SparkSession, paths: list[str], dest_dir: str | None) -> N
 
 def process_batch(cfg: IngestConfig) -> Callable[[DataFrame, int], None]:
     """foreachBatch body: one persisted pass, good/bad split, both sinks
-    idempotent on replay, exact audit counts from observe() metrics."""
+    idempotent on replay, exact audit counts and the batch's file list
+    from observe() metrics.
+
+    The stream reads with the fixed ``cfg.schema``, so the clean,
+    validate and enrich expressions are built once here, per stream; a
+    batch only applies them (same rows as ``validate(clean(df),
+    cfg.rules)``)."""
+    data_cols = cfg.schema.fieldNames()
+    trimmed = trim_columns(cfg.schema)
+    error = cfg.rules.error_expr(data_cols).alias(ERROR_COL)
+    is_bad = F.col(ERROR_COL).isNotNull()
+    # file_path is materialized INSIDE the persisted plan: evaluating
+    # input_file_name() above a cache returns '' on cache hits.
+    file_path = F.input_file_name().alias("file_path")
+    metrics = [
+        F.count(F.lit(1)).alias("total"),
+        F.count(F.when(is_bad, F.lit(1))).alias("bad"),
+        # lifecycle routing list, bounded by the files in the batch
+        # (maxFilesPerTrigger) — filled by the good write, no extra job
+        F.collect_set("file_path").alias("files"),
+    ]
+    enrich = [
+        *data_cols,
+        "file_path",
+        F.current_timestamp().alias("ingestion_ts"),
+        # hash over the DATA columns only (reference recipe,
+        # code/helpers.py:208-215) so replays produce identical
+        # idempotency keys.
+        row_hash_expr(data_cols).alias("row_hash"),
+    ]
+    quarantine_date = F.date_format(F.current_timestamp(), "yyyy-MM-dd").alias(
+        "quarantine_date"
+    )
 
     def _run(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        data_cols = list(batch_df.columns)
-        # file_path is materialized INSIDE the persisted plan: evaluating
-        # input_file_name() above a cache returns '' on cache hits.
         marked = (
-            validate(clean(batch_df), cfg.rules)
-            .withColumn("file_path", F.input_file_name())
+            drop_all_null_rows(batch_df.select(*trimmed))
+            .select("*", error, file_path)
             .persist()
         )
-        files: list[str] = []
+        files: list[str] | None = None
         try:
-            # File list for lifecycle routing: prefer the driver-side
-            # FileIndex snapshot (no job); fall back to a distinct over
-            # the persisted frame (tiny: one row per file).
-            files = list(batch_df.inputFiles() or []) or [
-                r[0] for r in marked.select("file_path").distinct().collect()
-            ]
-
             obs = Observation()
-            observed = marked.observe(
-                obs,
-                F.count(F.lit(1)).alias("total"),
-                F.count(F.when(F.col(ERROR_COL).isNotNull(), F.lit(1))).alias("bad"),
-            )
-            good = observed.filter(F.col(ERROR_COL).isNull())
-            enriched = good.select(
-                *data_cols,
-                "file_path",
-                F.current_timestamp().alias("ingestion_ts"),
-                # hash over the DATA columns only (reference recipe,
-                # code/helpers.py:208-215) so replays produce identical
-                # idempotency keys.
-                row_hash_expr(data_cols).alias("row_hash"),
-            )
+            enriched = marked.observe(obs, *metrics).filter(~is_bad).select(*enrich)
             (
                 enriched.withColumn("batch_id", F.lit(batch_id))
                 .write.mode("overwrite")
@@ -174,8 +184,9 @@ def process_batch(cfg: IngestConfig) -> Callable[[DataFrame, int], None]:
                 .partitionBy("batch_id")
                 .parquet(cfg.good_dir)
             )
-            metrics = obs.get  # filled by the write above — no count jobs
-            total, bad_count = int(metrics["total"]), int(metrics["bad"])
+            observed = obs.get  # filled by the write above — no extra jobs
+            total, bad_count = int(observed["total"]), int(observed["bad"])
+            files = list(observed["files"])
 
             if cfg.on_good is not None:
                 # K1/K2 slot (e.g. staged JDBC MERGE): recomputes from
@@ -185,12 +196,8 @@ def process_batch(cfg: IngestConfig) -> Callable[[DataFrame, int], None]:
 
             if bad_count:
                 (
-                    marked.filter(F.col(ERROR_COL).isNotNull())
-                    .withColumn(
-                        "quarantine_date",
-                        F.date_format(F.current_timestamp(), "yyyy-MM-dd"),
-                    )
-                    .withColumn("batch_id", F.lit(batch_id))
+                    marked.filter(is_bad)
+                    .select("*", quarantine_date, F.lit(batch_id).alias("batch_id"))
                     .write.mode("overwrite")
                     .option("partitionOverwriteMode", "dynamic")
                     .partitionBy("batch_id")
@@ -225,7 +232,11 @@ def process_batch(cfg: IngestConfig) -> Callable[[DataFrame, int], None]:
                     message=str(exc)[:500],
                 ),
             )
-            move_files(spark, files, cfg.failed_dir)
+            if files is None and cfg.failed_dir:
+                # the good write never finished, so observe() holds no
+                # file list: one distinct over the persisted frame
+                files = [r[0] for r in marked.select("file_path").distinct().collect()]
+            move_files(spark, files or [], cfg.failed_dir)
             raise
         finally:
             marked.unpersist()

@@ -158,6 +158,34 @@ def test_shared_bench_emits_json_as_final_stdout_line():
     assert all(v >= 0 for v in art["queries"].values())
 
 
+def test_shared_bench_prints_artifact_last_when_teardown_raises(
+    monkeypatch, capsys
+):
+    """The artifact line is printed in a `finally` around `spark.stop()`,
+    so a teardown exception cannot swallow it — the error still
+    propagates, after the line."""
+    from unittest import mock
+
+    spark = mock.MagicMock()
+    spark.stop.side_effect = RuntimeError("teardown failed")
+    monkeypatch.setattr(bench, "get_spark", lambda *a, **k: spark)
+    monkeypatch.setattr(
+        bench.entrymod, "queries", lambda: {"qa": lambda s, d: mock.MagicMock()}
+    )
+    monkeypatch.setenv("SPARK_GRAFT_QUERIES", "qa")
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/nonexistent/sf0.001")
+    monkeypatch.setenv("SPARK_GRAFT_WARM_DIR", "/nonexistent/warm")
+    monkeypatch.setattr(sys, "argv", ["bench.py"])
+
+    with pytest.raises(RuntimeError, match="teardown failed"):
+        bench.main()
+    spark.stop.assert_called_once()
+    lines = [ln for ln in capsys.readouterr().out.splitlines() if ln.strip()]
+    art = json.loads(lines[-1])
+    assert art["metric"] == "total_query_seconds"
+    assert set(art["queries"]) == {"qa"}
+
+
 def test_prior_default_picks_newest_floor():
     got = bench._prior_floor_path()
     assert got is not None and got.endswith("_floor.json")

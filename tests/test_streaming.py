@@ -733,3 +733,65 @@ def test_on_good_hook_receives_enriched_good_rows(spark, dirs):
     assert sum(n for _, n, _ in seen) == 3  # the good rows only
     for _, _, cols in seen:
         assert {"sensor_id", "file_path", "ingestion_ts", "row_hash"} <= cols
+
+
+def test_ingest_batch_fixed_cost_jobs_and_no_shuffle(spark, dirs, tmp_path):
+    """A micro-batch's fixed cost is its sink writes: at most three jobs
+    (good, quarantine, audit) and no shuffle stage. The file list for
+    lifecycle routing rides the observe() metrics of the good write, so a
+    per-batch distinct job over file_path must not come back."""
+    from advanced_real_time_data_pipeline_and_analytical_processing_spark.streaming.ingest import (
+        start_ingest,
+    )
+
+    write_file(dirs, "a.csv", CSV_MIXED)
+    write_file(dirs, "b.csv", CSV_MIXED)
+    cfg = make_cfg(dirs)
+    cfg.max_files_per_trigger = 1  # two micro-batches
+    cfg.processed_dir = str(tmp_path / "processed")
+    q = start_ingest(spark, cfg)
+    q.awaitTermination()
+
+    batches = [p for p in q.recentProgress if p.numInputRows > 0]
+    assert len(batches) == 2
+    assert sorted(os.listdir(cfg.processed_dir)) == ["a.csv", "b.csv"]
+    tracker = spark.sparkContext.statusTracker()
+    jobs = tracker.getJobIdsForGroup(str(q.runId))
+    assert 0 < len(jobs) <= 3 * len(batches), jobs
+    for j in jobs:
+        # a shuffle splits a job into a map stage and a result stage
+        assert len(tracker.getJobInfo(j).stageIds) == 1, j
+
+
+def test_failed_routing_before_good_write_finishes(spark, dirs, tmp_path):
+    """A batch that raises BEFORE its good write completes has no
+    observe() file list: the failure branch falls back to one distinct
+    over the batch, so its files still land in failed_dir, next to a
+    FAILURE audit row."""
+    failed = str(tmp_path / "failed")
+    write_file(dirs, "a.csv", CSV_GOOD)
+    with open(dirs["good"], "w") as fh:  # the good sink path is a FILE
+        fh.write("not a directory")
+    cfg = make_cfg(dirs)
+    cfg.failed_dir = failed
+    with pytest.raises(Exception):
+        run_ingest_once(spark, cfg)
+    assert os.listdir(failed) == ["a.csv"]
+    assert os.listdir(dirs["source"]) == []
+    audit = spark.read.parquet(dirs["audit"]).collect()
+    assert [(r["status"], r["total_rows"]) for r in audit] == [("FAILURE", 0)]
+    assert audit[0]["message"]
+
+
+def test_register_scratch_for_exit_is_idempotent(monkeypatch):
+    """Registering the same scratch dir twice keeps ONE entry, so one
+    release_scratch fully unregisters it."""
+    from advanced_real_time_data_pipeline_and_analytical_processing_spark.streaming import stateful
+
+    monkeypatch.setattr(stateful, "_EXIT_SCRATCH", [])
+    path = "/nonexistent/scratch/out_drain_x"
+    assert stateful.register_scratch_for_exit(path) == path
+    assert stateful.register_scratch_for_exit(path) == path
+    assert stateful._EXIT_SCRATCH == [path]
+    stateful.release_scratch(path)
+    assert stateful._EXIT_SCRATCH == []

@@ -1,6 +1,7 @@
 #!/usr/bin/env bash
 # One-command replica of every local gate, in the order that fails
-# fastest: registry pins (1 s), full pytest (~4 min), sf0.01 oracle
+# fastest: registry pins (1 s), full pytest (~4 min), the benchmark's
+# own unit tests (perfbench/tests, seconds), sf0.01 oracle
 # sweep (~15 min), FULL-REGISTRY driver-gate replica under typed
 # Arrow-fetch semantics (~15 min — the r9 lesson: check_oracle's str()
 # compare cannot see what the driver's typed fetch sees, so every
@@ -36,6 +37,7 @@ cd "$(dirname "$0")/.."
 python -m pytest tests/test_registry.py -q
 python tools/lint_oracle_types.py
 python -m pytest tests/ -x -q
+python3 -m pytest perfbench/tests -q
 python tools/check_oracle.py /root/testdata/sf0.01
 python tools/driver_gate_replica.py /root/testdata/sf0.01 220 docs/GATE_REPLICA_full.json
 # Independent from-scratch comparator (zero shared code with the two
