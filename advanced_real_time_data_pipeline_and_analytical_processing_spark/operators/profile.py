@@ -1,11 +1,10 @@
-"""One-pass table profiling: the per-column statistics report
+"""Table profiling: the per-column statistics report
 (null rate, distinct count, min/max) that gates every ingest.
 
-All columns profile in a SINGLE scan: one wide aggregate row (Catalyst
-plans the multi-DISTINCT via Expand + one hash agg pipeline, still one
-pass over the data) which is then unpivoted driver-free with
-explode(array(struct...)). At 100 TB that's the difference between one
-job and |columns| jobs.
+All columns profile in TWO aggregate passes, whatever the column count
+(see ``table_profile``): one wide aggregate row which is then unpivoted
+driver-free with explode(array(struct...)). At 100 TB that's the
+difference between two passes and |columns| jobs.
 
 Values are reported as strings so heterogeneous column types share one
 schema; doubles go through printf-style %.*f (C-semantics in both
@@ -84,7 +83,12 @@ def table_profile(
     aggregate (Expand over JUST the profiled columns) crossJoined with
     a plain one-pass aggregate (no Expand) emits byte-identical rows
     for ~half the time; at scale it trades one extra columnar scan for
-    a 6×-row reduction through the wide hash aggregate."""
+    a 6×-row reduction through the wide hash aggregate.
+
+    Consistency caveat: the two passes read ``df`` independently, so
+    over a changing or non-deterministic input they can see different
+    snapshots (e.g. ``n_distinct > n_rows``). Callers that need one
+    consistent profile must persist ``df`` first."""
     dtypes = dict(df.dtypes)
     cols = cols or list(df.columns)
     dist_aggs = [F.count_distinct(F.col(c)).alias(f"_dist_{c}") for c in cols]

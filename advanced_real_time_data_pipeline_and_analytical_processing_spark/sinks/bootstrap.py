@@ -27,7 +27,7 @@ from .writers import retry
 
 # The reference's startup layout, typo ("qurantine") deliberately NOT
 # reproduced: the engine's quarantine sink spells it correctly, and
-# naming here must match where writers.write_quarantine points.
+# naming here must match the quarantine sink ingest.process_batch writes.
 DEFAULT_FOLDERS = ("data", "processed", "audit", "quarantine", "schema")
 
 

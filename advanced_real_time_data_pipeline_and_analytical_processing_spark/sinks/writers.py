@@ -1,8 +1,11 @@
 """Sinks (reference K1-K4).
 
-- quarantine: bad rows + error_reason + quarantine_date, parquet
-  partitioned by quarantine_date (reference K3 used JSON,
-  ``code/helpers.py:229-244``; parquet keeps pushdown on re-reads).
+- quarantine (written by ``streaming/ingest.process_batch``, not here):
+  bad rows + error_reason + quarantine_date, parquet partitioned by
+  ``batch_id`` with dynamic partition overwrite, so a replayed batch
+  replaces its own partition (reference K3 appended JSON by
+  quarantine_date, ``code/helpers.py:229-244``; parquet keeps pushdown
+  on re-reads).
 - audit: explicit-schema one-row-per-batch table partitioned by
   audit_date (fixes reference anti-pattern §4.3-10: inferred audit
   schema), counts sourced from ``observe()`` metrics, not extra actions.
@@ -59,20 +62,6 @@ def retry(attempts: int = 3, delay_s: float = 5.0, backoff: float = 2.0):
         return wrapped
 
     return deco
-
-
-@retry()
-def write_quarantine(bad: DataFrame, out_dir: str, error_col: str = "error_reason") -> None:
-    """Bad rows partitioned by quarantine_date; append-mode parquet.
-    Partition pruning on the date keeps replays/inspections cheap."""
-    (
-        bad.withColumn(
-            "quarantine_date", F.date_format(F.current_timestamp(), "yyyy-MM-dd")
-        )
-        .write.mode("append")
-        .partitionBy("quarantine_date")
-        .parquet(out_dir)
-    )
 
 
 @dataclass
@@ -135,11 +124,3 @@ def write_jdbc(
     props = {"batchsize": "5000", "rewriteBatchedStatements": "true"}
     props.update(properties or {})
     df.write.jdbc(url=url, table=table, mode=mode, properties=props)
-
-
-def write_partitioned_parquet(
-    df: DataFrame, out_dir: str, partition_cols: list[str], mode: str = "append"
-) -> None:
-    """The engine's native serving store: partitioned columnar parquet
-    (replaces the reference's Postgres serving tables for analytics)."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(out_dir)

@@ -14,7 +14,11 @@ Fixes applied vs the reference (SURVEY.md §4.3):
 - §4.3-3 action storm: good/bad/total counts come from ``observe()``
   metrics collected during the good-path write — ZERO extra count jobs
   (the reference ran >=12 actions per batch; we run sink writes only;
-  the file list rides ``observe()``).
+  the file list rides ``observe()``). The reference also ran its sinks
+  one after another; here the quarantine write runs on a per-stream
+  worker thread alongside the good write (both read the one persisted
+  frame, so the source is scanned once) and is joined before the
+  audit record, the file moves and the unpersist.
 - §4.3-6/7: typed empty frames, quarantine keyed by batch + source file
   column rather than comma-joined table names.
 - §4.3-8 at-least-once side effects: the good and quarantine sinks are
@@ -37,9 +41,11 @@ Fixes applied vs the reference (SURVEY.md §4.3):
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from typing import Callable
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -138,7 +144,16 @@ def process_batch(cfg: IngestConfig) -> Callable[[DataFrame, int], None]:
     The stream reads with the fixed ``cfg.schema``, so the clean,
     validate and enrich expressions are built once here, per stream; a
     batch only applies them (same rows as ``validate(clean(df),
-    cfg.rules)``)."""
+    cfg.rules)``).
+
+    Each batch's writes are one-task jobs, so the quarantine write runs
+    on this stream's single worker thread while the good write runs on
+    the caller's. It inherits the stream's local properties (the run-id
+    job group, so stopping the query cancels it). It is unconditional:
+    a clean batch commits an empty write. It is joined before the
+    SUCCESS audit, the file moves and the unpersist, and a failing
+    quarantine write fails the batch like a failing good write. The
+    ``on_good`` hook may run while it is still in flight."""
     data_cols = cfg.schema.fieldNames()
     trimmed = trim_columns(cfg.schema)
     error = cfg.rules.error_expr(data_cols).alias(ERROR_COL)
@@ -165,6 +180,17 @@ def process_batch(cfg: IngestConfig) -> Callable[[DataFrame, int], None]:
     quarantine_date = F.date_format(F.current_timestamp(), "yyyy-MM-dd").alias(
         "quarantine_date"
     )
+    quarantine_pool = ThreadPoolExecutor(1, thread_name_prefix="ingest-quarantine")
+
+    def _quarantine(marked: DataFrame, batch_id: int) -> None:
+        (
+            marked.filter(is_bad)
+            .select("*", quarantine_date, F.lit(batch_id).alias("batch_id"))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(cfg.quarantine_dir)
+        )
 
     def _run(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -172,6 +198,11 @@ def process_batch(cfg: IngestConfig) -> Callable[[DataFrame, int], None]:
             drop_all_null_rows(batch_df.select(*trimmed))
             .select("*", error, file_path)
             .persist()
+        )
+        # wrapped per batch: the wrapper captures this thread's local
+        # properties (job group, description) when it is built
+        quarantined = quarantine_pool.submit(
+            inheritable_thread_target(spark)(_quarantine), marked, batch_id
         )
         files: list[str] | None = None
         try:
@@ -194,15 +225,7 @@ def process_batch(cfg: IngestConfig) -> Callable[[DataFrame, int], None]:
                 # Observation already captured its metrics above.
                 cfg.on_good(enriched, batch_id)
 
-            if bad_count:
-                (
-                    marked.filter(is_bad)
-                    .select("*", quarantine_date, F.lit(batch_id).alias("batch_id"))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("batch_id")
-                    .parquet(cfg.quarantine_dir)
-                )
+            quarantined.result()
             write_audit(
                 spark,
                 cfg.audit_dir,
@@ -218,6 +241,10 @@ def process_batch(cfg: IngestConfig) -> Callable[[DataFrame, int], None]:
             )
             move_files(spark, files, cfg.processed_dir)
         except Exception as exc:  # reference T6: failure audit, then re-raise
+            # the quarantine write may still be reading the source files
+            # and `marked`: let it end before the moves and the unpersist
+            # (its own error, if any, is superseded by `exc`)
+            wait([quarantined])
             write_audit(
                 spark,
                 cfg.audit_dir,

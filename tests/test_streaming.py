@@ -758,9 +758,71 @@ def test_ingest_batch_fixed_cost_jobs_and_no_shuffle(spark, dirs, tmp_path):
     tracker = spark.sparkContext.statusTracker()
     jobs = tracker.getJobIdsForGroup(str(q.runId))
     assert 0 < len(jobs) <= 3 * len(batches), jobs
+    # exactly good + quarantine + audit: the quarantine write runs on a
+    # worker thread and must still carry the stream's job group
+    assert len(jobs) == 3 * len(batches), jobs
     for j in jobs:
         # a shuffle splits a job into a map stage and a result stage
         assert len(tracker.getJobInfo(j).stageIds) == 1, j
+
+
+def test_clean_batch_commits_empty_quarantine_write(spark, dirs):
+    """A batch with no bad rows still runs the quarantine write, which
+    commits no data file; the batch stays within three jobs and its
+    audit row counts zero bad rows."""
+    from advanced_real_time_data_pipeline_and_analytical_processing_spark.streaming.ingest import (
+        start_ingest,
+    )
+
+    write_file(dirs, "a.csv", CSV_GOOD)
+    cfg = make_cfg(dirs)
+    q = start_ingest(spark, cfg)
+    q.awaitTermination()
+
+    tracker = spark.sparkContext.statusTracker()
+    assert 0 < len(tracker.getJobIdsForGroup(str(q.runId))) <= 3
+    data_files = [
+        f
+        for _, _, names in os.walk(dirs["quarantine"])
+        for f in names
+        if f.endswith(".parquet")
+    ]
+    assert data_files == []
+    audit = spark.read.parquet(dirs["audit"]).collect()
+    assert [(r["status"], r["total_rows"], r["bad_rows"]) for r in audit] == [
+        ("SUCCESS", 2, 0)
+    ]
+
+
+def test_failed_quarantine_write_fails_the_batch(spark, dirs, tmp_path):
+    """The quarantine write runs alongside the good write; when it fails
+    after the good write succeeded, the batch still fails as a whole:
+    the error is re-raised, the audit holds one FAILURE row and no
+    SUCCESS row, the files go to failed_dir and nothing stays cached."""
+    from advanced_real_time_data_pipeline_and_analytical_processing_spark.streaming.ingest import process_batch
+
+    failed = str(tmp_path / "failed")
+    write_file(dirs, "a.csv", CSV_MIXED)
+    with open(dirs["quarantine"], "w") as fh:  # the quarantine sink is a FILE
+        fh.write("not a directory")
+    cfg = make_cfg(dirs)
+    cfg.failed_dir = failed
+    batch_df = spark.read.option("header", "true").schema(SCHEMA).csv(dirs["source"])
+
+    def persisted():  # the session is shared: other tests' caches may remain
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    with pytest.raises(Exception):
+        process_batch(cfg)(batch_df, 0)
+
+    assert spark.read.parquet(dirs["good"]).count() == 1  # good write committed
+    audit = spark.read.parquet(dirs["audit"]).collect()
+    assert [r["status"] for r in audit] == ["FAILURE"]
+    assert audit[0]["message"]
+    assert os.listdir(failed) == ["a.csv"]
+    assert os.listdir(dirs["source"]) == []
+    assert persisted() <= before
 
 
 def test_failed_routing_before_good_write_finishes(spark, dirs, tmp_path):
